@@ -28,14 +28,11 @@ class Shape:
     n_urls: int
     # None: one payload per URL (the memo never hits); else shared count
     n_payloads: int | None
-    # None: every host's budget covers its whole share (one full round)
-    budget_scale: int | None
     expand: bool
     # after the first round, requeue the fetched seed pages with
-    # pmod(url_hash, requeue_mod) == 0 (0: no requeue)
+    # pmod(url_hash, requeue_mod) == 0, and compact after every round of
+    # the second crawl() call (0: neither)
     requeue_mod: int
-    # compaction cadence of the second crawl() call (the first: none)
-    compact_every: int | None
 
     @property
     def filter_expected(self) -> int:
@@ -47,13 +44,11 @@ SHAPES = {
     for s in (
         Shape(
             name="drain_unique", n_urls=8_000, n_payloads=None,
-            budget_scale=None, expand=False, requeue_mod=0,
-            compact_every=None,
+            expand=False, requeue_mod=0,
         ),
         Shape(
             name="rediscovery_requeue", n_urls=1_500, n_payloads=1000,
-            budget_scale=1000, expand=True, requeue_mod=8,
-            compact_every=1,
+            expand=True, requeue_mod=8,
         ),
     )
 }
@@ -86,11 +81,12 @@ def seeded_frontier(spark: SparkSession, shape: Shape, seed: int) -> DataFrame:
 
 
 def host_policy(spark: SparkSession, shape: Shape) -> DataFrame:
+    """The engine's host policy with every host's budget at ``n_urls``.
+    No host has more schedulable rows than that in any round (its seeds,
+    or its distinct child pages plus the requeued slice), so every round
+    schedules each host's whole share."""
     from cex_crawler_spark.synth import gen_host_policy
 
-    policy = gen_host_policy(spark)
-    if shape.budget_scale is None:
-        budget = F.lit(shape.n_urls)
-    else:
-        budget = F.col("budget_per_round") * shape.budget_scale
-    return policy.withColumn("budget_per_round", budget.cast("int"))
+    return gen_host_policy(spark).withColumn(
+        "budget_per_round", F.lit(shape.n_urls).cast("int")
+    )

@@ -25,6 +25,10 @@ import numpy as np
 from .spans import Tracer
 
 TRACE_GROUP = "perfbench-trace"
+# the local properties ``SparkContext.setJobGroup`` sets
+JOB_GROUP_PROPS = (
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel",
+)
 
 
 def dir_bytes(root: Path) -> tuple[int, int]:
@@ -47,6 +51,39 @@ def filter_fill(flt) -> float:
     if hasattr(flt, "bits"):
         return float(np.unpackbits(flt.bits).mean())
     return float((flt.table != 0).mean())
+
+
+@contextmanager
+def keep_job_group(sc):
+    """Restore the job group in force on entry when the block ends."""
+    saved = [sc.getLocalProperty(p) for p in JOB_GROUP_PROPS]
+    try:
+        yield
+    finally:
+        for p, v in zip(JOB_GROUP_PROPS, saved):
+            sc.setLocalProperty(p, v)
+
+
+@contextmanager
+def round_job_groups():
+    """Confine the job group ``run_round`` sets (``round-<id>``) to the
+    round: when it returns, the caller's group is back in force, so the
+    frontier probe and the compactions ``crawl`` runs between rounds are
+    not counted as the round's jobs."""
+    import cex_crawler_spark.plans.driver as driver_mod
+
+    original = driver_mod.run_round
+
+    @functools.wraps(original)
+    def run_round(spark, *args, **kwargs):
+        with keep_job_group(spark.sparkContext):
+            return original(spark, *args, **kwargs)
+
+    driver_mod.run_round = run_round
+    try:
+        yield
+    finally:
+        driver_mod.run_round = original
 
 
 @contextmanager
@@ -99,15 +136,10 @@ class _Wrappers:
     @contextmanager
     def counters(self):
         """Trace-only counting: a child span, under its own job group."""
-        props = ("spark.jobGroup.id", "spark.job.description")
-        saved = [self.sc.getLocalProperty(p) for p in props]
-        self.sc.setJobGroup(TRACE_GROUP, "benchmark trace counters")
-        try:
+        with keep_job_group(self.sc):
+            self.sc.setJobGroup(TRACE_GROUP, "benchmark trace counters")
             with self.tracer.span("trace.counters"):
                 yield
-        finally:
-            for p, v in zip(props, saved):
-                self.sc.setLocalProperty(p, v)
 
     def plain(self, name: str):
         def wrap(fn):

@@ -130,19 +130,18 @@ class SpanView:
         ]
         return (end - span.start) - covered(span.start, end, counting)
 
-    def self_sum_gap(self) -> float:
-        """Largest gap between a round's or crawl call's duration and the
-        sum of self times over its span tree (0 when spans nest)."""
-        gaps = [0.0]
-        for s in self.named("round.run_round") + self.named("driver.crawl"):
-            tree = [s] + self.descendants(s)
-            gaps.append(abs(sum(self.self_time(t) for t in tree) - s.duration))
-        return max(gaps)
+    def self_sum_gap(self, calls_s: float) -> float:
+        """Distance between the wall time the benchmark measured around
+        its ``crawl``/``requeue`` calls and the sum of the self times of
+        every span the pass recorded: the time no span covers, plus the
+        time spans that overlap instead of nesting would count twice."""
+        return abs(calls_s - sum(self.self_time(s) for s in self.spans))
 
 
-def per_layer(setup: Tracer, traced, untraced, probes: dict) -> dict:
+def per_layer(setup: Tracer, traced, untraced, warmup, probes: dict) -> dict:
     """Per-layer metrics from the set-up spans, a traced pass, the
-    untraced pass of the same run, and the single-layer probes."""
+    untraced pass of the same run, the failures of its warm-up round,
+    and the single-layer probes."""
     v = SpanView(traced.tracer)
     sv = SpanView(setup)
     rounds = v.named("round.run_round")
@@ -167,7 +166,8 @@ def per_layer(setup: Tracer, traced, untraced, probes: dict) -> dict:
         "round.stages": median([j["stages"] for j in jobs]),
         "round.tasks": median([j["tasks"] for j in jobs]),
         "round.failed_tasks": (
-            traced.failures["failed_tasks"] + untraced.failures["failed_tasks"]
+            warmup["failed_tasks"] + traced.failures["failed_tasks"]
+            + untraced.failures["failed_tasks"]
         ),
         "seen.anti_join_s": v.self_sum("seen.anti_join"),
         "seen.possibly_seen_frac": _ratio(
@@ -211,6 +211,6 @@ def per_layer(setup: Tracer, traced, untraced, probes: dict) -> dict:
             sum(s.counters["rows"] for s in links),
         ) if links else 0.0,
         "trace.overhead_frac": 1.0 - traced.urls_per_s / untraced.urls_per_s,
-        "trace.self_sum_gap_s": v.self_sum_gap(),
+        "trace.self_sum_gap_s": v.self_sum_gap(traced.calls_s),
     }
     return m

@@ -21,6 +21,7 @@ import signal
 import sys
 import tempfile
 import time
+from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -78,6 +79,7 @@ def run(workload: str, seed: int, seconds: int, traced: bool) -> dict:
         _log(f"{workload} seed={seed} trace={int(traced)}: starting session")
         bench.start_session()
         spark = bench.spark
+        bench.warm_up()
         _log("bootstrapping catalogs")
         bench.bootstrap_catalogs()
         setup_s = bench.session_s + bench.warmup_s + median(bench.bootstrap_s)
@@ -87,10 +89,12 @@ def run(workload: str, seed: int, seconds: int, traced: bool) -> dict:
         _log(f"replay {time.perf_counter() - t0:.2f}s")
 
         passes = []
+        warmup = Counter()
         if traced:
-            # the first pass in a fresh JVM also warms it; the traced pass
-            # is compared with the untraced pass that follows it
-            for trace_pass in (False, True, False):
+            # the traced pass is compared with the untraced pass that
+            # follows it, both after a warm-up round
+            warmup = bench.warm_up_round()
+            for trace_pass in (True, False):
                 passes.append(bench.run_pass(traced=trace_pass))
         else:
             # passes until the timed calls add up to --seconds (at least one)
@@ -103,9 +107,9 @@ def run(workload: str, seed: int, seconds: int, traced: bool) -> dict:
                  f"{len(p.rounds)} rounds, failures {dict(p.failures)}")
 
         if traced:
-            _, traced_pass, untraced = passes
+            traced_pass, untraced = passes
             values = metrics.per_layer(
-                bench.setup_tracer, traced_pass, untraced,
+                bench.setup_tracer, traced_pass, untraced, warmup,
                 {**probes.filter_rates(seed), **probes.fetch_verdicts(seed),
                  "session.peak_rss_mb": _peak_rss_mb(spark)},
             )
@@ -126,7 +130,9 @@ def run(workload: str, seed: int, seconds: int, traced: bool) -> dict:
             }
             units = metrics.END_TO_END
         attempted = sum(p.urls for p in passes)
-        failed = min(attempted, sum(sum(p.failures.values()) for p in passes))
+        failed = min(attempted, sum(warmup.values()) + sum(
+            sum(p.failures.values()) for p in passes
+        ))
         return {
             "correct": failed == 0,
             "attempted": attempted,

@@ -2,6 +2,7 @@
 
 import pytest
 
+from perfbench.metrics import SpanView
 from perfbench.spans import Tracer, covered
 
 
@@ -57,3 +58,16 @@ def test_record_adds_a_closed_root():
     t = Tracer("w", "r")
     s = t.record("session.start", 1.0, 3.5)
     assert s.parent is None and s.duration == 2.5 and t.spans == [s]
+
+
+def test_self_sum_gap_is_call_time_no_span_covers():
+    # crawl [0, 3] holding a round [1, 2], then requeue [10, 13]; the
+    # benchmark timed the two calls at 3.5 s and 3.5 s
+    t = Tracer("w", "r", clock=FakeClock([0, 1, 2, 3, 10, 13]))
+    with t.span("driver.crawl"):
+        with t.span("round.run_round"):
+            pass
+    with t.span("driver.requeue"):
+        pass
+    assert SpanView(t).self_sum_gap(3.5 + 3.5) == pytest.approx(1.0)
+    assert SpanView(t).self_sum_gap(6.0) == 0

@@ -11,9 +11,12 @@ Every workload runs the same crawl life cycle on its own input shape
    resumes from the Bloom sidecar (on a one-round drain it only loads the
    sidecar and finds the frontier empty).  After a requeue it uses the
    cuckoo filter, finds no sidecar on the requeue commit, rebuilds the
-   filter from the seen table, and does not expand links again (a
-   freshness re-fetch), so it drains in one round; it compacts the
-   append tables after every round.
+   filter from the seen table, and compacts the append tables after
+   every round.  Its first round fetches the discovered links and the
+   requeued pages; the re-fetched pages link to the same children again,
+   all resolved by then, so the next round's frontier is rediscoveries
+   only: the prefilter reports them possibly seen and the exact
+   anti-join drops them, and that round adds no result row.
 
 Only the ``crawl``/``requeue`` calls are timed, and an untraced pass
 runs the engine unwrapped.  The correctness checks run after the calls:
@@ -22,7 +25,8 @@ runs the engine unwrapped.  The correctness checks run after the calls:
   apart from the re-fetches, and the seen set must equal
   ``replayer.replay_crawl``, and every fetched row must be ``valid``;
 - ``requeue`` must report the slice as un-seen and re-queued, and every
-  requeued URL must be fetched exactly once more;
+  requeued URL must be fetched exactly once more (its re-discovered
+  links add no row, so the replayer comparison stays exact);
 - the last persisted Bloom and cuckoo sidecars must report
   ``might_contain`` for every key of the seen table they cover;
 - no Spark task may fail.
@@ -40,13 +44,19 @@ from pathlib import Path
 import numpy as np
 
 from cex_crawler_spark.functions.urlnorm import py_canonicalize_url, py_url_hash
+from cex_crawler_spark.replayer import SECTION_RANK
 
 from .inputs import WATERMARK, Shape, host_policy, seed_label, seeded_frontier
-from .layers import dir_bytes, instrument, url_hashes
+from .layers import dir_bytes, instrument, round_job_groups, url_hashes
 from .spans import Tracer
 
-SETUP_REPEATS = 3  # bootstraps per run; each pass uses one of the catalogs
+SETUP_REPEATS = 3  # bootstraps per run; each pass or warm-up round crawls one
 MAX_ROUNDS = 50
+
+
+def _crawl_order(r: dict) -> tuple:
+    """The order in which a round picks the first of duplicate rows."""
+    return (r["priority"], SECTION_RANK[r["section"]], r["seq"], r["seed_id"])
 
 
 def _result_key(r: dict) -> tuple:
@@ -117,11 +127,31 @@ class CrawlRun:
         self.session_s = time.perf_counter() - t0
         if self.setup_tracer:
             self.setup_tracer.record("session.start", t0, t0 + self.session_s)
-        # one warm-up action (JVM and codegen start-up), as bench.py does
+        self.policy = host_policy(self.spark, self.shape)
+
+    def warm_up(self) -> None:
+        """One JVM action, as ``bench.py`` warms up, and one Python action
+        that starts a worker per core and runs one payload verdict in it.
+        Without the second, the first round's fetch stage starts the
+        workers and imports the imaging code while the JVM is busy, for
+        a time that varies widely from run to run."""
         from pyspark.sql import functions as F
 
+        def start(batches):
+            from cex_crawler_spark.functions.imaging import decode_image, psnr
+            from cex_crawler_spark.payload import payload_for, reference_decode
+
+            for pdf in batches:
+                for i in pdf["id"]:
+                    p = payload_for(f"img{i:010d}")
+                    psnr(decode_image(p["bytes"], p["fmt"]),
+                         reference_decode(f"img{i:010d}"))
+                yield pdf
+
+        n = self.spark.sparkContext.defaultParallelism
         t0 = time.perf_counter()
         self.spark.range(1_000_000).select(F.sum("id")).collect()
+        self.spark.range(n, numPartitions=n).mapInPandas(start, "id long").collect()
         self.warmup_s = time.perf_counter() - t0
 
     def bootstrap_catalogs(self) -> None:
@@ -130,7 +160,7 @@ class CrawlRun:
         from cex_crawler_spark.catalog import SnapshotCatalog
         from cex_crawler_spark.plans.driver import bootstrap
 
-        self.policy = host_policy(self.spark, self.shape)
+        self.spark.sparkContext.setJobGroup("perfbench-setup", "benchmark set-up")
         tracer = self.setup_tracer
         with instrument(self.spark, tracer) if tracer else nullcontext():
             for i in range(SETUP_REPEATS):
@@ -187,7 +217,9 @@ class CrawlRun:
 
         failures: Counter = Counter()
         slice_keys: set[int] = set()
-        with instrument(spark, tracer) if tracer else nullcontext():
+        with round_job_groups(), (
+            instrument(spark, tracer) if tracer else nullcontext()
+        ):
             # crawl() returns one {round, **stats} entry per round it ran
             rounds = timed(
                 "crawl1", crawl, spark, cat, self.policy, WATERMARK,
@@ -206,8 +238,8 @@ class CrawlRun:
                 "crawl2", crawl, spark, cat, self.policy, WATERMARK,
                 max_rounds=MAX_ROUNDS, bloom_expected=shape.filter_expected,
                 filter_kind="cuckoo" if shape.requeue_mod else "bloom",
-                expand=shape.expand and not shape.requeue_mod,
-                compact_every=shape.compact_every,
+                expand=shape.expand,
+                compact_every=1 if shape.requeue_mod else None,
             )
         sc.setJobGroup(f"perfbench-{tag}-check", "benchmark checks")
         results = [r.asDict() for r in cat.read(spark, "results").collect()]
@@ -247,8 +279,9 @@ class CrawlRun:
 
     def requeue_input(self, cat):
         """A seeded slice of the fetched seed pages in seed shape (the
-        first seed row of each URL) at priority 1, as a local relation so
-        the timed ``requeue`` does not re-run the generator."""
+        seed row the first round fetched: the first in crawl order) at
+        priority 1, as a local relation so the timed ``requeue`` does not
+        re-run the generator."""
         from pyspark.sql import functions as F
 
         slice_keys = set(url_hashes(
@@ -259,7 +292,7 @@ class CrawlRun:
             )
         ).tolist())
         first: dict[int, dict] = {}
-        for row in sorted(self.seed_rows, key=lambda r: r["seed_id"]):
+        for row in sorted(self.seed_rows, key=_crawl_order):
             key = py_url_hash(py_canonicalize_url(row["url"]))
             if key in slice_keys and key not in first:
                 first[key] = {**row, "priority": 1}
@@ -303,45 +336,68 @@ class CrawlRun:
 
     # --------------------------------------------------------- job counts
 
+    def new_jobs(self, group: str) -> list[int]:
+        """Ids of the jobs of a job group not yet claimed by a round or
+        pass; claims them."""
+        tracker = self.spark.sparkContext.statusTracker()
+        ids = sorted(set(tracker.getJobIdsForGroup(group)) - self.attributed_jobs)
+        self.attributed_jobs.update(ids)
+        return ids
+
+    def stage_counts(self, job_ids: list[int]) -> dict:
+        tracker = self.spark.sparkContext.statusTracker()
+        stages = {}
+        for j in job_ids:
+            info = tracker.getJobInfo(j)
+            for sid in info.stageIds if info else ():
+                si = tracker.getStageInfo(sid)
+                if si and si.numCompletedTasks + si.numFailedTasks > 0:
+                    stages[sid] = si
+        return {
+            "jobs": len(job_ids),
+            "stages": len(stages),
+            "tasks": sum(s.numCompletedTasks for s in stages.values()),
+            "failed_tasks": sum(s.numFailedTasks for s in stages.values()),
+        }
+
     def count_jobs(self, result: PassResult, tag: str) -> None:
-        """Jobs, stages and tasks per round (job group ``round-<id>``) and
-        failed tasks over every job of the pass, from the status tracker."""
-        sc = self.spark.sparkContext
-        _drain_listener_bus(sc)
-        tracker = sc.statusTracker()
-
-        def new_jobs(group: str) -> list[int]:
-            ids = sorted(set(tracker.getJobIdsForGroup(group)) - self.attributed_jobs)
-            self.attributed_jobs.update(ids)
-            return ids
-
-        def stage_counts(job_ids: list[int]) -> dict:
-            stages = {}
-            for j in job_ids:
-                info = tracker.getJobInfo(j)
-                for sid in info.stageIds if info else ():
-                    si = tracker.getStageInfo(sid)
-                    if si and si.numCompletedTasks + si.numFailedTasks > 0:
-                        stages[sid] = si
-            return {
-                "jobs": len(job_ids),
-                "stages": len(stages),
-                "tasks": sum(s.numCompletedTasks for s in stages.values()),
-                "failed_tasks": sum(s.numFailedTasks for s in stages.values()),
-            }
-
+        """Jobs, stages and tasks per round (job group ``round-<id>``, the
+        jobs started inside ``run_round``) and failed tasks over every job
+        of the pass, from the status tracker."""
+        _drain_listener_bus(self.spark.sparkContext)
         for r in result.rounds:
-            result.round_jobs.append(
-                {"round": r["round"], **stage_counts(new_jobs(f"round-{r['round']}"))}
-            )
+            result.round_jobs.append({
+                "round": r["round"],
+                **self.stage_counts(self.new_jobs(f"round-{r['round']}")),
+            })
         rest = []
         for call in ("crawl1", "check", "requeue", "crawl2"):
-            rest += new_jobs(f"perfbench-{tag}-{call}")
-        rest += new_jobs("perfbench-trace")
-        failed = stage_counts(rest)["failed_tasks"] + sum(
+            rest += self.new_jobs(f"perfbench-{tag}-{call}")
+        rest += self.new_jobs("perfbench-trace")
+        failed = self.stage_counts(rest)["failed_tasks"] + sum(
             r["failed_tasks"] for r in result.round_jobs
         )
         result.failures["failed_tasks"] = failed
+
+
+    def warm_up_round(self) -> Counter:
+        """One untimed, unchecked crawl round on a catalog of its own.
+        The first round in a JVM runs slower than the rest, so a traced
+        run warms up before the two passes it compares.  Returns the
+        round's failed tasks."""
+        from cex_crawler_spark.plans.driver import crawl
+
+        sc = self.spark.sparkContext
+        sc.setJobGroup("perfbench-warmup", "benchmark warm-up")
+        with round_job_groups():
+            crawl(
+                self.spark, self.catalogs.pop(0), self.policy, WATERMARK,
+                max_rounds=1, bloom_expected=self.shape.filter_expected,
+                expand=self.shape.expand,
+            )
+        _drain_listener_bus(sc)
+        jobs = self.new_jobs("round-0") + self.new_jobs("perfbench-warmup")
+        return Counter(failed_tasks=self.stage_counts(jobs)["failed_tasks"])
 
 
 def _drain_listener_bus(sc) -> None:
